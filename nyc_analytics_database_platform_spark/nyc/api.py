@@ -1,26 +1,35 @@
 """The reference's end-user query API, engine-native (SURVEY.md section 2.11).
 
 Each function mirrors a server.py entry point, with the same response shape
-and edge-case semantics, but computed as one or two Spark jobs instead of
-serial SQL round-trips:
+and edge-case semantics:
 
-- bbl_summary       <- get_bbl_data (server.py:130-256; 5 round-trips -> 2 jobs)
+- bbl_summary       <- get_bbl_data (server.py:130-256)
 - bbl_trends        <- get_time_series_data + month spine (server.py:259-342)
 - analytics         <- /analytics route (server.py:383-432)
 - compare           <- /compare route (server.py:435-473) - returns a typed
                        error for an unresolvable address instead of crashing
                        on None (the reference's latent bug, server.py:461,468)
-- bookmarks_summary <- /bookmarks (server.py:561-580) - one batched pass, not
-                       an N+1 loop
+- bookmarks_summary <- /bookmarks (server.py:561-580) - one batched lookup,
+                       not an N+1 loop
 - export_rows       <- /export/<bbl> CSV (server.py:498-535)
 
-Results are plain Python structures (these are API responses - small by
-construction); all heavy lifting stays distributed.
+Design: one fetch per fact table, folded on the driver. A request resolves
+its parcels in one geo lookup, then collects their filtered rows once from
+service_request (`_requests`) and once from sale joined to property
+(`_sales`). Totals, active and by-type counts, orderings, min/max, exact
+medians and the month spine are all computed in Python from those rows. A
+dashboard answers one parcel at a time and a parcel's facts are small, so
+this costs a lookup and two scans per request instead of one Spark aggregate
+per returned number, and nothing is cached in the shared session.
 """
 
 from __future__ import annotations
 
+import operator
+from collections import Counter, defaultdict
 from dataclasses import dataclass
+from datetime import datetime
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,19 +67,30 @@ class GeocodeError(Exception):
         return f"could not geocode address: {self.address!r}"
 
 
-def _lookup_geo(tables: dict[str, DataFrame], b: int, bl: int, l: int):
-    """Natural-key point lookup (reference: server.py:135-152)."""
+def _lookup_geo(tables: dict[str, DataFrame], keys: list[tuple[int, int, int]]) -> dict:
+    """Natural-key point lookup of parsed BBLs (reference: server.py:135-152):
+    {(borough, block, lot): Row(geographic_id, borough_name)} for the keys
+    that exist, in one scan however many keys are asked for."""
+    match = reduce(
+        operator.or_,
+        [
+            (F.col("borough_code") == b) & (F.col("block_code") == bl) & (F.col("lot_code") == l)
+            for b, bl, l in keys
+        ],
+    )
     rows = (
         tables["geographic_area"]
-        .filter(
-            (F.col("borough_code") == b)
-            & (F.col("block_code") == bl)
-            & (F.col("lot_code") == l)
-        )
-        .select("geographic_id", "borough_name")
+        .filter(match)
+        .select("borough_code", "block_code", "lot_code", "geographic_id", "borough_name")
         .collect()
     )
-    return rows[0] if rows else None
+    return {(r["borough_code"], r["block_code"], r["lot_code"]): r for r in rows}
+
+
+def _parcel(tables: dict[str, DataFrame], bbl: str):
+    """The BBL's geo row, or None when it is malformed or unknown."""
+    key = parse_bbl(bbl)
+    return None if key is None else _lookup_geo(tables, [key]).get(key)
 
 
 def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) -> DataFrame:
@@ -82,6 +102,68 @@ def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) 
     return df
 
 
+def _requests(
+    tables: dict[str, DataFrame],
+    gids: list[int],
+    start: str | None = None,
+    end: str | None = None,
+) -> list:
+    """The parcels' service requests created in the window, one row each:
+    geographic_id, created_date, status, complaint_type_name."""
+    sr = _date_filtered(
+        tables["service_request"].filter(F.col("geographic_id").isin(gids)),
+        "created_date",
+        start,
+        end,
+    )
+    return (
+        sr.join(F.broadcast(tables["complaint_type"]), "complaint_type_id")
+        .select("geographic_id", "created_date", "status", "complaint_type_name")
+        .collect()
+    )
+
+
+def _sales(
+    tables: dict[str, DataFrame],
+    gids: list[int],
+    start: str | None = None,
+    end: str | None = None,
+) -> list:
+    """The parcels' sales in the window, most recent first with sale_id
+    breaking date ties: geographic_id, sale_id, sale_date, price (cast to
+    float as server.py:214 does), address."""
+    props = (
+        tables["property"]
+        .filter(F.col("geographic_id").isin(gids))
+        .select("property_id", "geographic_id", F.col("property_address").alias("address"))
+    )
+    rows = (
+        _date_filtered(tables["sale"], "sale_date", start, end)
+        .join(F.broadcast(props), "property_id")
+        .select(
+            "geographic_id",
+            "sale_id",
+            "sale_date",
+            F.col("sale_price").cast("double").alias("price"),
+            "address",
+        )
+        .collect()
+    )
+    return sorted(rows, key=lambda r: (r["sale_date"], r["sale_id"]), reverse=True)
+
+
+def _median(values: list[float]) -> float:
+    """Exact median, linearly interpolated between the middle pair as
+    Spark's exact median and DuckDB's `quantile_cont` do (server.py:224)."""
+    v = sorted(values)
+    mid = len(v) // 2
+    return v[mid] if len(v) % 2 else v[mid - 1] + (v[mid] - v[mid - 1]) / 2
+
+
+def _active(requests: list) -> int:
+    return sum(r["status"] in ACTIVE_STATUSES for r in requests)  # server.py:172
+
+
 def bbl_summary(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -89,88 +171,42 @@ def bbl_summary(
     start: str | None = None,
     end: str | None = None,
 ) -> dict[str, Any] | None:
-    """get_bbl_data parity (server.py:130-256). The reference's five
-    sequential queries collapse into: one SR pass (totals + by-type via
-    grouping) and one Sale pass (rows + stats share a cached join)."""
-    parsed = parse_bbl(bbl)
-    if parsed is None:
-        return None
-    geo = _lookup_geo(tables, *parsed)
+    """get_bbl_data parity (server.py:130-256): the reference's five
+    sequential queries become one fetch per fact table, folded here."""
+    geo = _parcel(tables, bbl)
     if geo is None:
         return None
-    gid = geo["geographic_id"]
+    gids = [geo["geographic_id"]]
+    requests = _requests(tables, gids, start, end)
+    sales = _sales(tables, gids, start, end)
 
-    # --- service requests: totals + by-type in one pass over one scan
-    sr = _date_filtered(
-        tables["service_request"].filter(F.col("geographic_id") == gid),
-        "created_date",
-        start,
-        end,
+    by_type = defaultdict(list)
+    for r in requests:
+        by_type[r["complaint_type_name"]].append(r)
+    complaints = sorted(
+        ({"type": t, "count": len(rs), "active": _active(rs)} for t, rs in by_type.items()),
+        key=lambda c: (-c["count"], c["type"]),
     )
-    by_type = (
-        sr.join(F.broadcast(tables["complaint_type"]), "complaint_type_id")
-        .groupBy("complaint_type_name")
-        .agg(
-            F.count("*").alias("count"),
-            F.sum(
-                F.when(F.col("status").isin(*ACTIVE_STATUSES), 1).otherwise(0)
-            ).alias("active_count"),
-        )
-        .orderBy(F.desc("count"), "complaint_type_name")
-        .collect()
-    )
-    total_requests = sum(r["count"] for r in by_type)
-    active_requests = sum(r["active_count"] for r in by_type)
-
-    # --- sales: detail rows + stats from one cached filtered join
-    sales_df = (
-        _date_filtered(
-            tables["sale"], "sale_date", start, end
-        )
-        .join(
-            tables["property"].filter(F.col("geographic_id") == gid).select(
-                "property_id", "property_address"
-            ),
-            "property_id",
-        )
-        .cache()
-    )
-    sales_rows = (
-        sales_df.orderBy(F.desc("sale_date"), F.desc("sale_id"))
-        .select(
-            F.col("sale_price").cast("double").alias("price"),  # server.py:214
-            F.date_format("sale_date", "yyyy-MM-dd").alias("date"),
-            F.col("property_address").alias("address"),
-        )
-        .collect()
-    )
-    if sales_rows:
-        stats = sales_df.agg(
-            F.min(F.col("sale_price").cast("double")).alias("min_price"),
-            F.max(F.col("sale_price").cast("double")).alias("max_price"),
-            F.percentile(F.col("sale_price").cast("double"), 0.5).alias("median_price"),
-        ).collect()[0]
+    prices = [s["price"] for s in sales]
+    if prices:
         sale_stats = {
-            "min_price": stats["min_price"],
-            "max_price": stats["max_price"],
-            "median_price": stats["median_price"],
+            "min_price": min(prices),
+            "max_price": max(prices),
+            "median_price": _median(prices),
         }
-    else:  # zeroed-stats branch: the reference returns 0, not None/NULL
-        # (server.py:237-240 sets median/min/max = 0 when no sales exist)
+    else:  # the reference returns 0, not None/NULL (server.py:237-240)
         sale_stats = {"min_price": 0, "max_price": 0, "median_price": 0}
-    sales_df.unpersist()
-
     return {
         "bbl": bbl,
         "borough_name": geo["borough_name"],
-        "total_requests": total_requests,
-        "active_requests": active_requests,
-        "complaints_by_type": [
-            {"type": r["complaint_type_name"], "count": r["count"], "active": r["active_count"]}
-            for r in by_type
+        "total_requests": len(requests),
+        "active_requests": _active(requests),
+        "complaints_by_type": complaints,
+        "sales": [
+            {"price": s["price"], "date": s["sale_date"].isoformat(), "address": s["address"]}
+            for s in sales
         ],
-        "sales": [r.asDict() for r in sales_rows],
-        "num_sales": len(sales_rows),  # server.py:252
+        "num_sales": len(sales),  # server.py:252
         "sale_stats": sale_stats,
     }
 
@@ -196,67 +232,41 @@ def bbl_trends(
     day-of-month (server.py:319-329), which silently drops the final month
     when day(start) > day(end) and crashes on day-31 starts - both sides
     agree on the default/whole-month windows the UI issues."""
-    # Validate window bounds FIRST (route-param inputs reach SQL text below;
-    # everything else in this module goes through parameterized F.lit) -
-    # strict %Y-%m-%d, not fromisoformat, which also admits '20240101' /
-    # week-date forms that the SQL date literal would choke on. Malformed
-    # dates raise regardless of whether the parcel exists.
-    from datetime import datetime as _dt
+    # Route-param input: strict %Y-%m-%d, not fromisoformat, which also
+    # admits '20240101' / week-date forms. Malformed dates raise regardless
+    # of whether the parcel exists.
+    try:
+        lo, hi = (datetime.strptime(b, "%Y-%m-%d") for b in (start, end))
+    except (TypeError, ValueError) as exc:
+        raise ValueError(f"invalid date window: {start!r}..{end!r}") from exc
 
-    for bound in (start, end):
-        try:
-            _dt.strptime(bound, "%Y-%m-%d")
-        except (TypeError, ValueError) as exc:
-            raise ValueError(f"invalid date window: {start!r}..{end!r}") from exc
-
-    parsed = parse_bbl(bbl)
-    if parsed is None:
-        return None
-    geo = _lookup_geo(tables, *parsed)
+    geo = _parcel(tables, bbl)
     if geo is None:
         return None
-    gid = geo["geographic_id"]
-
-    if metric in ("service_requests", "complaints"):
-        fact = _date_filtered(
-            tables["service_request"].filter(F.col("geographic_id") == gid),
-            "created_date",
-            start,
-            end,
-        )
-        agg = fact.groupBy(
-            F.trunc("created_date", "month").alias("month_d")
-        ).agg(F.count("*").alias("count"))
-        with_median = False
-    elif metric == "sales":
-        fact = (
-            _date_filtered(tables["sale"], "sale_date", start, end)
-            .join(
-                tables["property"].filter(F.col("geographic_id") == gid).select("property_id"),
-                "property_id",
-            )
-        )
-        agg = fact.groupBy(F.trunc("sale_date", "month").alias("month_d")).agg(
-            F.percentile(F.col("sale_price").cast("double"), 0.5).alias("median_price"),
-            F.count("*").alias("count"),
-        )
-        with_median = True
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-
+    gids = [geo["geographic_id"]]
     # spine over the requested window (server.py:319-329 iterates the window,
     # not the data bounds)
-    spine = spark.sql(
-        f"SELECT explode(sequence(trunc(date'{start}', 'month'), "
-        f"trunc(date'{end}', 'month'), interval 1 month)) AS month_d"
-    )
-    joined = spine.join(agg, "month_d", "left")
-    cols = [F.date_format("month_d", "yyyy-MM").alias("month")]
-    if with_median:
-        cols.append(F.col("median_price"))  # gap months stay NULL
-    cols.append(F.coalesce(F.col("count"), F.lit(0)).alias("count"))
-    out = joined.select(*cols).orderBy("month")
-    return [r.asDict() for r in out.collect()]
+    months = [
+        f"{i // 12:04d}-{i % 12 + 1:02d}"
+        for i in range(lo.year * 12 + lo.month - 1, hi.year * 12 + hi.month)
+    ]
+    if metric in ("service_requests", "complaints"):
+        requests = _requests(tables, gids, start, end)
+        counts = Counter(r["created_date"].isoformat()[:7] for r in requests)
+        return [{"month": m, "count": counts[m]} for m in months]
+    if metric == "sales":
+        prices = defaultdict(list)
+        for s in _sales(tables, gids, start, end):
+            prices[s["sale_date"].isoformat()[:7]].append(s["price"])
+        return [
+            {
+                "month": m,
+                "median_price": _median(prices[m]) if prices[m] else None,
+                "count": len(prices[m]),
+            }
+            for m in months
+        ]
+    raise ValueError(f"unknown metric {metric!r}")
 
 
 def analytics(
@@ -316,80 +326,36 @@ def bookmarks_summary(
     tables: dict[str, DataFrame],
     bbls: list[str],
 ) -> list[dict[str, Any]]:
-    """/bookmarks parity (server.py:561-580), batched: ONE grouped pass over
-    all bookmarked keys instead of a serial per-key 5-query loop. No date
-    filter, matching the reference."""
+    """/bookmarks parity (server.py:561-580), batched: one geo lookup and one
+    fetch per fact table for all bookmarked keys instead of a serial per-key
+    5-query loop. No date filter, matching the reference."""
     parsed = [(bbl, parse_bbl(bbl)) for bbl in bbls]
     keys = [p for _, p in parsed if p is not None]
-    if not keys:
+    geo = _lookup_geo(tables, keys) if keys else {}
+    if not geo:
         return []
-    geo = tables["geographic_area"]
-    key_df = spark.createDataFrame(
-        keys, "borough_code int, block_code int, lot_code int"
-    )
-    matched = geo.join(
-        F.broadcast(key_df), ["borough_code", "block_code", "lot_code"]
-    ).select("geographic_id", "borough_name", "borough_code", "block_code", "lot_code")
-
-    # Semi-join the facts down to the bookmarked parcels BEFORE aggregating:
-    # a groupBy over the full fact tables would shuffle every geographic_id
-    # at 100 TB to answer a handful of bookmarks.
-    gids = matched.select("geographic_id")
-    sr = (
-        tables["service_request"]
-        .join(F.broadcast(gids), "geographic_id", "left_semi")
-        .groupBy("geographic_id")
-        .agg(
-            F.count("*").alias("total_requests"),
-            F.sum(
-                F.when(F.col("status").isin(*ACTIVE_STATUSES), 1).otherwise(0)
-            ).alias("active_requests"),
-        )
-    )
-    props = tables["property"].select("property_id", "geographic_id").join(
-        F.broadcast(gids), "geographic_id", "inner"
-    )
-    sales = (
-        tables["sale"]
-        .join(props, "property_id")
-        .groupBy("geographic_id")
-        .agg(
-            F.count("*").alias("num_sales"),
-            F.percentile(F.col("sale_price").cast("double"), 0.5).alias("median_price"),
-        )
-    )
-    rows = (
-        matched.join(sr, "geographic_id", "left")
-        .join(sales, "geographic_id", "left")
-        .select(
-            "borough_code",
-            "block_code",
-            "lot_code",
-            "borough_name",
-            F.coalesce("total_requests", F.lit(0)).alias("total_requests"),
-            F.coalesce("active_requests", F.lit(0)).alias("active_requests"),
-            F.coalesce("num_sales", F.lit(0)).alias("num_sales"),
-            "median_price",
-        )
-        .collect()
-    )
-    by_key = {
-        (r["borough_code"], r["block_code"], r["lot_code"]): r for r in rows
-    }
+    gids = sorted({g["geographic_id"] for g in geo.values()})
+    requests, prices = defaultdict(list), defaultdict(list)
+    for r in _requests(tables, gids):
+        requests[r["geographic_id"]].append(r)
+    for s in _sales(tables, gids):
+        prices[s["geographic_id"]].append(s["price"])
     out = []
-    for bbl, p in parsed:
-        if p is not None and p in by_key:
-            r = by_key[p]
-            out.append(
-                {
-                    "bbl": bbl,
-                    "borough_name": r["borough_name"],
-                    "total_requests": r["total_requests"],
-                    "active_requests": r["active_requests"],
-                    "num_sales": r["num_sales"],
-                    "median_price": r["median_price"],
-                }
-            )
+    for bbl, key in parsed:
+        g = geo.get(key)
+        if g is None:
+            continue
+        reqs, p = requests[g["geographic_id"]], prices[g["geographic_id"]]
+        out.append(
+            {
+                "bbl": bbl,
+                "borough_name": g["borough_name"],
+                "total_requests": len(reqs),
+                "active_requests": _active(reqs),
+                "num_sales": len(p),
+                "median_price": _median(p) if p else None,
+            }
+        )
     return out
 
 

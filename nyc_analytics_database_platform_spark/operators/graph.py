@@ -275,9 +275,10 @@ def kcore_members(
     handful of waves).
 
     Scale: each round is two node-set semi-joins + one degree aggregate
-    over the CURRENT edge subset, with localCheckpoint truncating lineage
-    exactly like the CC loop. The node set only shrinks, so per-round cost
-    is monotone non-increasing."""
+    over the CURRENT edge subset; an eager localCheckpoint of each round's
+    surviving node set truncates lineage, so round r plans against
+    materialized nodes, not r nested peels. The node set only shrinks, so
+    per-round cost is monotone non-increasing."""
     und = edges.select(
         F.col(a_col).alias("node"), F.col(b_col).alias("other")
     ).unionByName(

@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 16g: local mode runs
+    every task inside the driver JVM, and a heap sized past RAM (no swap)
+    gets the process killed rather than collected."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "nyc-analytics-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -58,7 +66,10 @@ def get_spark(app_name: str = "nyc-analytics-spark", cpus: int | None = None) ->
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -109,8 +109,9 @@ def main() -> None:
     ap.add_argument("--suffix", default=None, help="write <plans-dir>/<name>_<suffix>.txt")
     ap.add_argument("--plans-dir", default=os.path.join(REPO, "plans", "r14"))
     ap.add_argument("--capture-internal", action="store_true",
-                    help="also write internal stage plans hooked by eager "
-                         "composites (plans/<name>__<label>_<suffix>.txt)")
+                    help="also capture internal stage plans hooked by eager "
+                         "composites (plans/<name>__<label>_<suffix>.txt; "
+                         "without --suffix, kept in the --out record)")
     ap.add_argument("--out", default="/tmp/qprof.json")
     args = ap.parse_args()
 
@@ -120,11 +121,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Absorb JVM/codegen startup on the smallest SF (same as bench.py).
-    # Guarded: a host without the fixture still profiles --sf (ADVICE r13).
+    # Guarded: a host without the fixture still profiles --sf.
     warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(os.path.join(warm_dir, "region.parquet")) or os.path.exists(
-        os.path.join(warm_dir, "region.parquet")
-    ):
+    if os.path.exists(os.path.join(warm_dir, "region.parquet")):
         load(spark, warm_dir, "region").count()
         for n in names:
             try:
@@ -152,6 +151,9 @@ def main() -> None:
         rec["n_exchange"] = plan.count("Exchange")
         rec["n_wsc"] = plan.count("WholeStageCodegen")
         print(json.dumps(rec), flush=True)
+        if internal and not args.suffix:
+            # no plan files were written: keep the captured plans in --out
+            rec["internal_plans"] = [{"label": label, "plan": text} for label, text in internal]
         results.append(rec)
         clear_engine_state(spark)
     with open(args.out, "w") as f:
