@@ -61,7 +61,8 @@ def clear_engine_state(spark: SparkSession) -> None:
     unpersist loop below destroys, and a memo that outlives its blocks
     hands every later consumer a dead plan
     (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND - seen in the registry invariants
-    sweep, round 13)."""
+    sweep, round 13). The same memo holds nyc.api's driver-side dimension
+    maps, so this drops those too and the next request rebuilds them."""
     memo = getattr(spark, "_nadb_artifact_cache", None)
     if memo is not None:
         memo.clear()
@@ -94,6 +95,23 @@ def capture_plan(df: DataFrame, label: str) -> None:
     cap.append((label, text))
 
 
+def _footer_files(path: str) -> list[str]:
+    """The parquet files whose footers describe a table: the file itself,
+    or every top-level .parquet file of a flat table directory. Raises
+    ValueError on a directory holding any subdirectory (a partitioned or
+    mixed layout, whose nested files a top-level listing would silently
+    leave out) or no .parquet file; callers fall back to a Spark job."""
+    if not os.path.isdir(path):
+        return [path]
+    entries = os.listdir(path)
+    if any(os.path.isdir(os.path.join(path, e)) for e in entries):
+        raise ValueError(f"subdirectories under {path}; nested layouts need a Spark job")
+    files = [os.path.join(path, f) for f in entries if f.endswith(".parquet")]
+    if not files:
+        raise ValueError(f"no .parquet files under {path}")
+    return files
+
+
 _ROW_COUNT_CACHE: dict = {}
 
 
@@ -103,7 +121,8 @@ def footer_row_count(sf_dir: str, name: str) -> int:
     heuristics (e.g. the RFM quintile path switch) where a count() job
     inside the timed query body would add a full fact scan at exactly the
     scales where the switch matters. Raises on non-local / non-parquet
-    layouts; callers fall back to a Spark count."""
+    layouts and on table directories with subdirectories (_footer_files);
+    callers fall back to a Spark count."""
     # mtime in the key: regenerating testdata mid-process must refresh the
     # memoized scalar (same freshness discipline as the persisted layouts'
     # _source_stamp) instead of serving a stale count to plan-selection.
@@ -112,25 +131,9 @@ def footer_row_count(sf_dir: str, name: str) -> int:
     if key not in _ROW_COUNT_CACHE:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            parts = [
-                f for f in os.listdir(path) if f.endswith(".parquet")
-            ]
-            if not parts:
-                # nested (partitioned) layouts are NOT walked here - a
-                # silent 0 would flip plan-selection heuristics; callers
-                # fall back to a Spark count on this raise
-                raise ValueError(
-                    f"no flat .parquet files under {path}; "
-                    "partitioned layouts need a Spark count"
-                )
-            total = sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in parts
-            )
-        else:
-            total = pq.ParquetFile(path).metadata.num_rows
-        _ROW_COUNT_CACHE[key] = total
+        _ROW_COUNT_CACHE[key] = sum(
+            pq.ParquetFile(f).metadata.num_rows for f in _footer_files(path)
+        )
     return _ROW_COUNT_CACHE[key]
 
 
@@ -241,7 +244,8 @@ def footer_column_minmax(sf_dir: str, name: str, column: str):
     metadata read, NO Spark job; the column twin of footer_row_count. For
     anchor/horizon scalars (e.g. MAX(o_orderdate)) that otherwise cost a
     full fact scan inside the timed query body. Raises if any row group
-    lacks stats for the column (callers fall back to a Spark agg). At
+    lacks stats for the column or the table directory has subdirectories
+    (callers fall back to a Spark agg). At
     100 TB the same scalars come from the table format's manifest; reading
     per-file footers driver-side is the local-parquet stand-in, memoized
     per (sf_dir, name, column, source mtime) — the mtime component means a
@@ -252,15 +256,8 @@ def footer_column_minmax(sf_dir: str, name: str, column: str):
     if key not in _COL_MINMAX_CACHE:
         import pyarrow.parquet as pq
 
-        files = (
-            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        if not files:
-            raise ValueError(f"no flat .parquet files under {path}")
         lo = hi = None
-        for fpath in files:
+        for fpath in _footer_files(path):
             md = pq.ParquetFile(fpath).metadata
             idx = [md.schema.column(i).name for i in range(md.num_columns)].index(column)
             for rg in range(md.num_row_groups):

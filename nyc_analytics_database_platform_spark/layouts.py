@@ -34,8 +34,12 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import threading
 
 from nyc_analytics_database_platform_spark.catalog import table_path
+
+_ARTIFACT_LOCK = threading.RLock()
+_MISSING = object()
 
 
 def tag(sf_dir: str) -> str:
@@ -92,17 +96,28 @@ def mark_fresh(marker: str, stamp: str) -> None:
 
 
 def session_artifact(spark, key: tuple, builder):
-    """Per-session memo for small persisted-artifact frames (frozen
-    quantizers/codebooks, dedup v1 state): the parquet on disk is the
-    durable artifact, but re-reading + localCheckpointing it on every
-    consumer call costs a small job each time for a frame that cannot
-    change within a session. Keyed by (path, stamp) so a regenerated
-    testdata set (new stamp) invalidates naturally; same pattern as
-    catalog.load's per-session plan memo."""
+    """Per-session memo for small values that cannot change while their
+    key holds: persisted-artifact frames (frozen quantizers/codebooks, dedup
+    v1 state), whose parquet on disk is the durable artifact but whose
+    re-read + localCheckpoint would cost a small job on every consumer
+    call, and the driver-side NYC dimension maps of nyc.api, keyed by the
+    dimension frame and its files' stamps. A key carries its own freshness
+    stamp, so regenerated inputs miss naturally; same pattern as
+    catalog.load's per-session plan memo.
+
+    A hit takes no lock. A miss builds under one module-wide re-entrant
+    lock (a builder may itself call this memo), so concurrent clients
+    that miss the same key build it once."""
     cache = getattr(spark, "_nadb_artifact_cache", None)
-    if cache is None:
-        cache = {}
-        spark._nadb_artifact_cache = cache
-    if key not in cache:
-        cache[key] = builder()
-    return cache[key]
+    value = _MISSING if cache is None else cache.get(key, _MISSING)
+    if value is not _MISSING:
+        return value
+    with _ARTIFACT_LOCK:
+        cache = getattr(spark, "_nadb_artifact_cache", None)
+        if cache is None:
+            cache = {}
+            spark._nadb_artifact_cache = cache
+        value = cache.get(key, _MISSING)
+        if value is _MISSING:
+            value = cache[key] = builder()
+        return value

@@ -13,28 +13,36 @@ and edge-case semantics:
                        not an N+1 loop
 - export_rows       <- /export/<bbl> CSV (server.py:498-535)
 
-Design: one fetch per fact table, folded on the driver. A request resolves
-its parcels in one geo lookup, then collects their filtered rows once from
-service_request (`_requests`) and once from sale joined to property
-(`_sales`). Totals, active and by-type counts, orderings, min/max, exact
-medians and the month spine are all computed in Python from those rows. A
-dashboard answers one parcel at a time and a parcel's facts are small, so
-this costs a lookup and two scans per request instead of one Spark aggregate
-per returned number, and nothing is cached in the shared session.
+Design: dimensions on the driver, one fetch per fact table. The three
+dimension tables a request reads become driver-side maps, built once per
+session and source by `_dim_map` through layouts.session_artifact:
+(borough, block, lot) -> (geographic_id, borough_name), complaint_type_id ->
+name, and geographic_id -> [(property_id, address)]. A map's key holds the
+dimension frame and its files' (URI, mtime, size), so a different frame or
+a rewritten file builds a new map; clear_engine_state drops them all. Fact
+tables are never memoized. A request then collects its parcels' filtered
+rows once from service_request (`_requests`) and once from sale
+(`_sales`, by the parcels' property ids), and folds totals, active and
+by-type counts, orderings, min/max, exact medians and the month spine in
+Python. With the maps built, that is one Spark job per fact table read:
+summary, analytics, export and bookmarks 2, trends 1, an unknown or
+malformed BBL 0, and a sales read of a parcel without properties 0.
+Nothing is cached in the shared session's CacheManager.
 """
 
 from __future__ import annotations
 
-import operator
+import os
 from collections import Counter, defaultdict
 from dataclasses import dataclass
 from datetime import datetime
-from functools import reduce
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_analytics_database_platform_spark import layouts
 from nyc_analytics_database_platform_spark.nyc.schema import ACTIVE_STATUSES
 
 DEFAULT_START, DEFAULT_END = "2024-01-01", "2024-12-31"  # server.py:392-395
@@ -67,30 +75,40 @@ class GeocodeError(Exception):
         return f"could not geocode address: {self.address!r}"
 
 
-def _lookup_geo(tables: dict[str, DataFrame], keys: list[tuple[int, int, int]]) -> dict:
-    """Natural-key point lookup of parsed BBLs (reference: server.py:135-152):
-    {(borough, block, lot): Row(geographic_id, borough_name)} for the keys
-    that exist, in one scan however many keys are asked for."""
-    match = reduce(
-        operator.or_,
-        [
-            (F.col("borough_code") == b) & (F.col("block_code") == bl) & (F.col("lot_code") == l)
-            for b, bl, l in keys
-        ],
-    )
-    rows = (
-        tables["geographic_area"]
-        .filter(match)
-        .select("borough_code", "block_code", "lot_code", "geographic_id", "borough_name")
-        .collect()
-    )
-    return {(r["borough_code"], r["block_code"], r["lot_code"]): r for r in rows}
+def _file_stamp(uri: str) -> tuple:
+    """(uri, mtime ns, size) of a local input file; a remote one is its URI."""
+    url = urlparse(uri)
+    if url.scheme not in ("", "file"):
+        return (uri,)
+    st = os.stat(unquote(url.path))
+    return (uri, st.st_mtime_ns, st.st_size)
 
 
-def _parcel(tables: dict[str, DataFrame], bbl: str):
-    """The BBL's geo row, or None when it is malformed or unknown."""
+def _dim_map(spark: SparkSession, tables: dict[str, DataFrame], name: str, fold):
+    """fold(dimension frame) as a driver-side value, memoized per session
+    under the frame itself (a live entry never matches another frame) and
+    the stamps of its input files (a rewritten file misses)."""
+    df = tables[name]
+    stamp = tuple(_file_stamp(uri) for uri in df.inputFiles())
+    return layouts.session_artifact(spark, ("nyc.dim", name, df, stamp), lambda: fold(df))
+
+
+def _geo(spark: SparkSession, tables: dict[str, DataFrame]) -> dict:
+    """{(borough, block, lot): (geographic_id, borough_name)}, the natural-key
+    lookup of server.py:135-152."""
+    return _dim_map(spark, tables, "geographic_area", lambda df: {
+        (b, bl, l): (gid, name)
+        for b, bl, l, gid, name in df.select(
+            "borough_code", "block_code", "lot_code", "geographic_id", "borough_name"
+        ).collect()
+    })
+
+
+def _parcel(spark: SparkSession, tables: dict[str, DataFrame], bbl: str):
+    """The BBL's (geographic_id, borough_name), or None when it is malformed
+    or unknown."""
     key = parse_bbl(bbl)
-    return None if key is None else _lookup_geo(tables, [key]).get(key)
+    return None if key is None else _geo(spark, tables).get(key)
 
 
 def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) -> DataFrame:
@@ -103,53 +121,74 @@ def _date_filtered(df: DataFrame, col: str, start: str | None, end: str | None) 
 
 
 def _requests(
+    spark: SparkSession,
     tables: dict[str, DataFrame],
     gids: list[int],
     start: str | None = None,
     end: str | None = None,
-) -> list:
-    """The parcels' service requests created in the window, one row each:
-    geographic_id, created_date, status, complaint_type_name."""
-    sr = _date_filtered(
+) -> list[dict]:
+    """The parcels' service requests created in the window, one dict each:
+    geographic_id, created_date, status, complaint_type_name. A request whose
+    complaint_type_id is not in complaint_type is dropped, as an inner join
+    would drop it."""
+    names = _dim_map(spark, tables, "complaint_type", lambda df: dict(
+        df.select("complaint_type_id", "complaint_type_name").collect()
+    ))
+    rows = _date_filtered(
         tables["service_request"].filter(F.col("geographic_id").isin(gids)),
         "created_date",
         start,
         end,
-    )
-    return (
-        sr.join(F.broadcast(tables["complaint_type"]), "complaint_type_id")
-        .select("geographic_id", "created_date", "status", "complaint_type_name")
-        .collect()
-    )
+    ).select("geographic_id", "created_date", "status", "complaint_type_id").collect()
+    return [
+        {"geographic_id": gid, "created_date": created, "status": status,
+         "complaint_type_name": names[ctype]}
+        for gid, created, status, ctype in rows
+        if ctype in names
+    ]
 
 
 def _sales(
+    spark: SparkSession,
     tables: dict[str, DataFrame],
     gids: list[int],
     start: str | None = None,
     end: str | None = None,
-) -> list:
+) -> list[dict]:
     """The parcels' sales in the window, most recent first with sale_id
     breaking date ties: geographic_id, sale_id, sale_date, price (cast to
-    float as server.py:214 does), address."""
-    props = (
-        tables["property"]
-        .filter(F.col("geographic_id").isin(gids))
-        .select("property_id", "geographic_id", F.col("property_address").alias("address"))
-    )
+    float as server.py:214 does), address. No job when the parcels have no
+    property."""
+    props = _dim_map(spark, tables, "property", _properties_by_parcel)
+    owner = {pid: (gid, address) for gid in gids for pid, address in props.get(gid, ())}
+    if not owner:
+        return []
     rows = (
-        _date_filtered(tables["sale"], "sale_date", start, end)
-        .join(F.broadcast(props), "property_id")
-        .select(
-            "geographic_id",
-            "sale_id",
+        _date_filtered(
+            tables["sale"].filter(F.col("property_id").isin(list(owner))),
             "sale_date",
-            F.col("sale_price").cast("double").alias("price"),
-            "address",
+            start,
+            end,
         )
+        .select("sale_id", "property_id", "sale_date", F.col("sale_price").cast("double"))
         .collect()
     )
-    return sorted(rows, key=lambda r: (r["sale_date"], r["sale_id"]), reverse=True)
+    sales = [
+        {"geographic_id": owner[pid][0], "sale_id": sid, "sale_date": date,
+         "price": price, "address": owner[pid][1]}
+        for sid, pid, date, price in rows
+    ]
+    return sorted(sales, key=lambda r: (r["sale_date"], r["sale_id"]), reverse=True)
+
+
+def _properties_by_parcel(df: DataFrame) -> dict[int, list[tuple]]:
+    """{geographic_id: [(property_id, property_address)]}."""
+    out = defaultdict(list)
+    for pid, gid, address in df.select(
+        "property_id", "geographic_id", "property_address"
+    ).collect():
+        out[gid].append((pid, address))
+    return dict(out)
 
 
 def _median(values: list[float]) -> float:
@@ -173,12 +212,12 @@ def bbl_summary(
 ) -> dict[str, Any] | None:
     """get_bbl_data parity (server.py:130-256): the reference's five
     sequential queries become one fetch per fact table, folded here."""
-    geo = _parcel(tables, bbl)
+    geo = _parcel(spark, tables, bbl)
     if geo is None:
         return None
-    gids = [geo["geographic_id"]]
-    requests = _requests(tables, gids, start, end)
-    sales = _sales(tables, gids, start, end)
+    gid, borough_name = geo
+    requests = _requests(spark, tables, [gid], start, end)
+    sales = _sales(spark, tables, [gid], start, end)
 
     by_type = defaultdict(list)
     for r in requests:
@@ -198,7 +237,7 @@ def bbl_summary(
         sale_stats = {"min_price": 0, "max_price": 0, "median_price": 0}
     return {
         "bbl": bbl,
-        "borough_name": geo["borough_name"],
+        "borough_name": borough_name,
         "total_requests": len(requests),
         "active_requests": _active(requests),
         "complaints_by_type": complaints,
@@ -240,10 +279,10 @@ def bbl_trends(
     except (TypeError, ValueError) as exc:
         raise ValueError(f"invalid date window: {start!r}..{end!r}") from exc
 
-    geo = _parcel(tables, bbl)
+    geo = _parcel(spark, tables, bbl)
     if geo is None:
         return None
-    gids = [geo["geographic_id"]]
+    gids = [geo[0]]
     # spine over the requested window (server.py:319-329 iterates the window,
     # not the data bounds)
     months = [
@@ -251,12 +290,12 @@ def bbl_trends(
         for i in range(lo.year * 12 + lo.month - 1, hi.year * 12 + hi.month)
     ]
     if metric in ("service_requests", "complaints"):
-        requests = _requests(tables, gids, start, end)
+        requests = _requests(spark, tables, gids, start, end)
         counts = Counter(r["created_date"].isoformat()[:7] for r in requests)
         return [{"month": m, "count": counts[m]} for m in months]
     if metric == "sales":
         prices = defaultdict(list)
-        for s in _sales(tables, gids, start, end):
+        for s in _sales(spark, tables, gids, start, end):
             prices[s["sale_date"].isoformat()[:7]].append(s["price"])
         return [
             {
@@ -326,30 +365,26 @@ def bookmarks_summary(
     tables: dict[str, DataFrame],
     bbls: list[str],
 ) -> list[dict[str, Any]]:
-    """/bookmarks parity (server.py:561-580), batched: one geo lookup and one
-    fetch per fact table for all bookmarked keys instead of a serial per-key
-    5-query loop. No date filter, matching the reference."""
-    parsed = [(bbl, parse_bbl(bbl)) for bbl in bbls]
-    keys = [p for _, p in parsed if p is not None]
-    geo = _lookup_geo(tables, keys) if keys else {}
-    if not geo:
+    """/bookmarks parity (server.py:561-580), batched: one fetch per fact
+    table for all bookmarked keys instead of a serial per-key 5-query loop.
+    No date filter, matching the reference."""
+    geo = _geo(spark, tables)
+    found = [(bbl, geo[key]) for bbl in bbls if (key := parse_bbl(bbl)) in geo]
+    if not found:
         return []
-    gids = sorted({g["geographic_id"] for g in geo.values()})
+    gids = sorted({gid for _, (gid, _) in found})
     requests, prices = defaultdict(list), defaultdict(list)
-    for r in _requests(tables, gids):
+    for r in _requests(spark, tables, gids):
         requests[r["geographic_id"]].append(r)
-    for s in _sales(tables, gids):
+    for s in _sales(spark, tables, gids):
         prices[s["geographic_id"]].append(s["price"])
     out = []
-    for bbl, key in parsed:
-        g = geo.get(key)
-        if g is None:
-            continue
-        reqs, p = requests[g["geographic_id"]], prices[g["geographic_id"]]
+    for bbl, (gid, borough_name) in found:
+        reqs, p = requests[gid], prices[gid]
         out.append(
             {
                 "bbl": bbl,
-                "borough_name": g["borough_name"],
+                "borough_name": borough_name,
                 "total_requests": len(reqs),
                 "active_requests": _active(reqs),
                 "num_sales": len(p),

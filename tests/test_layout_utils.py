@@ -194,3 +194,68 @@ def test_clear_engine_state_drops_artifact_memo(spark, sf_dir):
     again = layouts.session_artifact(spark, key, builder)
     assert builds == [1, 1], "memo must rebuild after clear_engine_state"
     assert again.count() == n  # and the rebuilt frame must evaluate
+
+
+def test_session_artifact_builds_once_under_concurrency():
+    """Clients that miss the same key together build it once: the miss path
+    holds one lock, so the others wait and take the first build's value."""
+    import sys
+    import threading
+    import time
+    import types
+    from concurrent.futures import ThreadPoolExecutor
+
+    from nyc_analytics_database_platform_spark import layouts
+
+    session = types.SimpleNamespace()  # the memo only needs an attribute slot
+    start = threading.Barrier(4)
+    builds = []
+
+    def builder():
+        builds.append(1)
+        time.sleep(0.05)  # keep the build open while the others arrive
+        return object()
+
+    def client(_):
+        start.wait(timeout=10)
+        return layouts.session_artifact(session, ("test-concurrent-memo",), builder)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            values = list(pool.map(client, range(4), timeout=30))
+    finally:
+        sys.setswitchinterval(interval)
+    assert builds == [1]
+    assert all(v is values[0] for v in values)
+
+
+def test_footer_readers_raise_on_nested_layouts(tmp_path):
+    """footer_row_count / footer_column_minmax read top-level files only, so
+    a table directory that also holds a subdirectory must raise (callers
+    fall back to Spark) rather than undercount."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from nyc_analytics_database_platform_spark.catalog import (
+        footer_column_minmax,
+        footer_row_count,
+        table_path,
+    )
+
+    part = pa.table({"k": [1, 2, 3]})
+    flat, mixed = str(tmp_path / "flat"), str(tmp_path / "mixed")
+    for sf in (flat, mixed):
+        os.makedirs(table_path(sf, "t"))
+        pq.write_table(part, os.path.join(table_path(sf, "t"), "part-0.parquet"))
+    assert footer_row_count(flat, "t") == 3
+    assert footer_column_minmax(flat, "t", "k") == (1, 3)
+    nested = os.path.join(table_path(mixed, "t"), "k=9")
+    os.makedirs(nested)
+    pq.write_table(pa.table({"k": [9]}), os.path.join(nested, "part-1.parquet"))
+    with pytest.raises(ValueError, match="subdirectories"):
+        footer_row_count(mixed, "t")
+    with pytest.raises(ValueError, match="subdirectories"):
+        footer_column_minmax(mixed, "t", "k")

@@ -3,14 +3,19 @@ item 2) - every reference edge case: empty sales -> zeroed stats, month gaps
 -> 0/None fill, >5 complaint types -> Other bucket, date-range composition,
 ordering determinism, unresolvable geocode -> typed error - plus the
 request path's cost and safety: Spark jobs per endpoint, no cached blocks
-left behind, and identical replies under concurrent clients."""
+left behind, identical replies under concurrent clients, and dimension maps
+memoized per frame and file stamp."""
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlparse
 
 import pytest
+from pyspark.sql import functions as F
 
+from nyc_analytics_database_platform_spark.catalog import clear_engine_state
 from nyc_analytics_database_platform_spark.nyc import api
 from nyc_analytics_database_platform_spark.nyc.fixtures import nyc_tables
 from nyc_analytics_database_platform_spark.sources.geocode import geocode_dim
@@ -212,17 +217,18 @@ def test_export_csv(spark, tables):
     assert sales_csv.splitlines()[1] == "100 BROADWAY,1500000.0,2024-04-01"
 
 
-# (name, call, most Spark jobs it may launch): a geo lookup plus one fetch per
-# fact table it reads, each fetch a broadcast job and a collect.
+# (name, call, most Spark jobs it may launch once the dimension maps are
+# built): one collect per fact table it reads, none for a parcel the geo map
+# does not hold or a sales read of a parcel without properties.
 ENDPOINT_CALLS = [
-    ("summary", lambda s, t: api.bbl_summary(s, t, "1-100-10", "2024-01-01", "2024-12-31"), 5),
-    ("summary_no_sales", lambda s, t: api.bbl_summary(s, t, "2-200-20"), 5),
-    ("trends", lambda s, t: api.bbl_trends(s, t, "1-100-10"), 3),
-    ("trends_sales", lambda s, t: api.bbl_trends(s, t, "1-100-10", metric="sales"), 3),
-    ("analytics", lambda s, t: api.analytics(s, t, "1-100-10"), 5),
-    ("bookmarks", lambda s, t: api.bookmarks_summary(s, t, ["1-100-10", "3-300-30", "2-2-2"]), 5),
-    ("export", lambda s, t: api.export_rows(s, t, "1-100-10", "sales"), 5),
-    ("unknown", lambda s, t: api.bbl_summary(s, t, "5-999-999"), 1),
+    ("summary", lambda s, t: api.bbl_summary(s, t, "1-100-10", "2024-01-01", "2024-12-31"), 2),
+    ("summary_no_sales", lambda s, t: api.bbl_summary(s, t, "2-200-20"), 1),
+    ("trends", lambda s, t: api.bbl_trends(s, t, "1-100-10"), 1),
+    ("trends_sales", lambda s, t: api.bbl_trends(s, t, "1-100-10", metric="sales"), 1),
+    ("analytics", lambda s, t: api.analytics(s, t, "1-100-10"), 2),
+    ("bookmarks", lambda s, t: api.bookmarks_summary(s, t, ["1-100-10", "3-300-30", "2-2-2"]), 2),
+    ("export", lambda s, t: api.export_rows(s, t, "1-100-10", "sales"), 2),
+    ("unknown", lambda s, t: api.bbl_summary(s, t, "5-999-999"), 0),
     ("malformed", lambda s, t: api.bbl_trends(s, t, "garbage"), 0),
 ]
 
@@ -233,8 +239,10 @@ def _cache_is_empty(spark) -> bool:
 
 @pytest.fixture(scope="module")
 def serial_replies(spark, tables):
-    """{name: (reply, jobs)}: every endpoint once, under its own job group."""
+    """{name: (reply, jobs)}: every endpoint once, under its own job group,
+    after one warm-up call has built the dimension maps."""
     spark.catalog.clearCache()  # earlier test modules share this session
+    api.bbl_summary(spark, tables, "1-100-10")
     sc = spark.sparkContext
     out = {}
     for name, call, _ in ENDPOINT_CALLS:
@@ -267,3 +275,34 @@ def test_concurrent_clients_match_serial(spark, tables, serial_replies):
     expected = {name: reply for name, (reply, _) in serial_replies.items()}
     assert all(r == expected for r in replies)
     assert _cache_is_empty(spark)
+
+
+def _dim_keys(spark) -> list:
+    return [k for k in getattr(spark, "_nadb_artifact_cache", {}) if k[0] == "nyc.dim"]
+
+
+def test_dimension_memo_follows_frame_and_files(spark, tables):
+    def by_type(t):
+        return [r["type"] for r in api.bbl_summary(spark, t, "1-100-10")["complaints_by_type"]]
+
+    names = by_type(tables)
+    # another complaint_type frame is another key: its names show up
+    renamed = tables["complaint_type"].withColumn(
+        "complaint_type_name", F.concat(F.lit("X "), "complaint_type_name")
+    )
+    assert by_type({**tables, "complaint_type": renamed}) == [f"X {n}" for n in names]
+    assert by_type(tables) == names
+    # a rewritten geographic_area file misses: the next call adds an entry
+    before = len(_dim_keys(spark))
+    files = [urlparse(uri).path for uri in tables["geographic_area"].inputFiles()]
+    stats = [os.stat(f) for f in files]
+    try:
+        for f, st in zip(files, stats):
+            os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        assert by_type(tables) == names
+        assert len(_dim_keys(spark)) == before + 1
+    finally:
+        for f, st in zip(files, stats):
+            os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    clear_engine_state(spark)
+    assert _dim_keys(spark) == []
