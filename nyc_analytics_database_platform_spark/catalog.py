@@ -17,8 +17,10 @@ optionally bucketed by join key; the loaders keep that invisible to queries.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,6 +48,29 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def file_stamp(path: str) -> tuple:
+    """The engine's one freshness token: (name, st_mtime_ns, st_size) for
+    each parquet file of a local file, table directory (walked, names
+    relative to it) or file: URI. A rewrite at the same path changes it,
+    even within the same second. A non-local URI stamps as itself. Every
+    memo and persisted-layout marker that outlives a query keys on it."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return (path,)
+    local = unquote(url.path) if url.scheme else path
+    if not os.path.isdir(local):
+        st = os.stat(local)
+        return ((os.path.basename(local), st.st_mtime_ns, st.st_size),)
+    stamp = []
+    for root, _dirs, files in os.walk(local):
+        for f in files:
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), local)
+                stamp.append((rel, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(stamp))
+
+
 def clear_engine_state(spark: SparkSession) -> None:
     """Drop EVERYTHING the block manager holds between independent query
     executions: `catalog.clearCache()` only drops SQL-cache entries, but
@@ -62,7 +87,11 @@ def clear_engine_state(spark: SparkSession) -> None:
     hands every later consumer a dead plan
     (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND - seen in the registry invariants
     sweep, round 13). The same memo holds nyc.api's driver-side dimension
-    maps, so this drops those too and the next request rebuilds them."""
+    maps, so this drops those too and the next request rebuilds them.
+
+    The catalog.load memo stays: its frames are plans, not blocks, each
+    re-reads itself when its table's file_stamp changes, and dropping them
+    would re-pay ~80 ms of schema inference per table per query."""
     memo = getattr(spark, "_nadb_artifact_cache", None)
     if memo is not None:
         memo.clear()
@@ -100,7 +129,7 @@ def _footer_files(path: str) -> list[str]:
     or every top-level .parquet file of a flat table directory. Raises
     ValueError on a directory holding any subdirectory (a partitioned or
     mixed layout, whose nested files a top-level listing would silently
-    leave out) or no .parquet file; callers fall back to a Spark job."""
+    leave out) or no .parquet file."""
     if not os.path.isdir(path):
         return [path]
     entries = os.listdir(path)
@@ -112,29 +141,58 @@ def _footer_files(path: str) -> list[str]:
     return files
 
 
-_ROW_COUNT_CACHE: dict = {}
+def footer_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Table row count from parquet footer metadata: a driver-side read,
+    no Spark job. For plan-selection heuristics (e.g. the RFM quintile path
+    switch) where a count() job inside the timed query body would add a
+    full fact scan at exactly the scales where the switch matters. A layout
+    the footers cannot describe (nested or mixed directories, a path
+    pyarrow cannot open) is answered by one Spark count over the table."""
+    import pyarrow.parquet as pq
 
-
-def footer_row_count(sf_dir: str, name: str) -> int:
-    """Table row count from parquet footer metadata — a driver-side footer
-    read, NO Spark job. Memoized per (sf_dir, name). For plan-selection
-    heuristics (e.g. the RFM quintile path switch) where a count() job
-    inside the timed query body would add a full fact scan at exactly the
-    scales where the switch matters. Raises on non-local / non-parquet
-    layouts and on table directories with subdirectories (_footer_files);
-    callers fall back to a Spark count."""
-    # mtime in the key: regenerating testdata mid-process must refresh the
-    # memoized scalar (same freshness discipline as the persisted layouts'
-    # _source_stamp) instead of serving a stale count to plan-selection.
     path = table_path(sf_dir, name)
-    key = (sf_dir, name, os.path.getmtime(path))
-    if key not in _ROW_COUNT_CACHE:
-        import pyarrow.parquet as pq
+    try:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in _footer_files(path))
+    except (OSError, ValueError):
+        return spark.read.parquet(path).count()
 
-        _ROW_COUNT_CACHE[key] = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in _footer_files(path)
-        )
-    return _ROW_COUNT_CACHE[key]
+
+def footer_file_minmax(path: str, column: str):
+    """(min, max) of a column in ONE parquet file from its footer
+    statistics, no Spark job; (None, None) when a row group lacks them.
+    The per-file reader behind footer_column_minmax and txnlog's
+    file-granular pruning."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    idx = [md.schema.column(i).name for i in range(md.num_columns)].index(column)
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None, None
+        lo = st.min if lo is None or st.min < lo else lo
+        hi = st.max if hi is None or st.max > hi else hi
+    return lo, hi
+
+
+def footer_column_minmax(spark: SparkSession, sf_dir: str, name: str, column: str):
+    """(min, max) of a table column from parquet footer statistics: the
+    column twin of footer_row_count, for anchor/horizon scalars (e.g.
+    MAX(o_orderdate)) that otherwise cost a full fact scan inside the timed
+    query body. At 100 TB the same scalars come from the table format's
+    manifest. A layout the footers cannot describe (nested or mixed
+    directories, a file without stats for the column) is answered by one
+    Spark aggregate over the table."""
+    path = table_path(sf_dir, name)
+    try:
+        pairs = [footer_file_minmax(f, column) for f in _footer_files(path)]
+    except (OSError, ValueError):
+        pairs = [(None, None)]
+    if all(lo is not None for lo, _ in pairs):
+        return min(lo for lo, _ in pairs), max(hi for _, hi in pairs)
+    row = spark.read.parquet(path).agg(F.min(column), F.max(column)).first()
+    return row[0], row[1]
 
 
 def load(
@@ -142,7 +200,6 @@ def load(
     sf_dir: str,
     name: str,
     parallel: bool = False,
-    fresh: bool = False,
 ) -> DataFrame:
     """Load a table. `parallel=True` guarantees the frame has at least the
     cluster's default parallelism in partitions - required for CPU-bound
@@ -152,14 +209,8 @@ def load(
     next to the per-row work it parallelizes. At 100 TB inputs are already
     wide and the guard is a no-op.
 
-    INVARIANT: the returned DataFrame is memoized per (sf_dir, name,
-    parallel) for the session's lifetime, and the cached plan pins the
-    parquet file listing from the first read. Code that REWRITES a table
-    at the same path mid-session (fixture regeneration, re-layout tests)
-    must pass `fresh=True` (re-reads and refreshes the cache entry) or
-    clear `spark._nadb_load_cache`; otherwise it silently sees the stale
-    listing or fails on deleted files. Driver testdata is read-only, so
-    ordinary queries never need this."""
+    The frame is reused while the table's file_stamp holds; a table
+    rewritten at the same path is re-read on the next call."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
@@ -178,8 +229,8 @@ def load(
     # custom timezone for subsequent LTZ rendering.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Memoize the (lazy, immutable) DataFrame per session: every load pays
-    # a driver-side parquet footer read for schema inference plus a file
+    # Memoize the (lazy, immutable) DataFrame per session with the stamp it
+    # was read at: a read pays a schema-inference Spark job plus a file
     # listing - pure fixed overhead when the same table is loaded by dozens
     # of queries in one session (bench/driver/tests). The cache lives ON
     # the session object so a fresh driver session starts clean; conf
@@ -189,9 +240,12 @@ def load(
         cache = {}
         spark._nadb_load_cache = cache  # type: ignore[attr-defined]
     ck = (sf_dir, name, parallel)
-    if ck in cache and not fresh:
-        return cache[ck]
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    stamp = file_stamp(path)
+    hit = cache.get(ck)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = spark.read.parquet(path)
     if parallel:
         # File count is a driver-side lookup (no job, no RDD conversion -
         # df.rdd.getNumPartitions() would force one per load). Fewer files
@@ -207,66 +261,35 @@ def load(
         # truncates toward zero, which differs from DuckDB's ns->us cast for
         # pre-epoch timestamps. (ts - pmod(ts, 1000)) div 1000 floors exactly
         # in long arithmetic (no double round-trip).
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("(ts - pmod(ts, 1000)) div 1000"))
             )
-    cache[ck] = df
+    cache[ck] = (stamp, df)
     return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (same names as the DuckDB oracle).
-    Overwrites same-named temp views - the catalog owns these names."""
+    Overwrites same-named temp views - the catalog owns these names. A view
+    is re-registered only when its load frame changed (another sf_dir, or
+    a rewritten table), so a warm call costs one load memo hit per table."""
+    views = getattr(spark, "_nadb_views", None)
+    if views is None:
+        views = spark._nadb_views = {}  # type: ignore[attr-defined]
     for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-    spark._nadb_registered_sf_dir = sf_dir  # type: ignore[attr-defined]
+        df = load(spark, sf_dir, name)
+        if views.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            views[name] = df
 
 
-def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+def sql(spark: SparkSession, sf_dir: str, query: str, args=None) -> DataFrame:
     """Raw-SQL entry point: every catalog table is available by name, so the
     full engine surface is reachable from plain Spark SQL (Catalyst produces
-    the same plans as the DataFrame API). View registration is memoized per
-    (session, sf_dir) so repeated queries skip the parquet footer reads."""
-    if getattr(spark, "_nadb_registered_sf_dir", None) != sf_dir:
-        register_views(spark, sf_dir)
-    return spark.sql(query)
-
-
-_COL_MINMAX_CACHE: dict = {}
-
-
-def footer_column_minmax(sf_dir: str, name: str, column: str):
-    """(min, max) of a column from parquet footer STATISTICS - a driver-side
-    metadata read, NO Spark job; the column twin of footer_row_count. For
-    anchor/horizon scalars (e.g. MAX(o_orderdate)) that otherwise cost a
-    full fact scan inside the timed query body. Raises if any row group
-    lacks stats for the column or the table directory has subdirectories
-    (callers fall back to a Spark agg). At
-    100 TB the same scalars come from the table format's manifest; reading
-    per-file footers driver-side is the local-parquet stand-in, memoized
-    per (sf_dir, name, column, source mtime) — the mtime component means a
-    regenerated table refreshes the anchor/horizon scalar instead of
-    serving the previous file's stats (ADVICE r9)."""
-    path = table_path(sf_dir, name)
-    key = (sf_dir, name, column, os.path.getmtime(path))
-    if key not in _COL_MINMAX_CACHE:
-        import pyarrow.parquet as pq
-
-        lo = hi = None
-        for fpath in _footer_files(path):
-            md = pq.ParquetFile(fpath).metadata
-            idx = [md.schema.column(i).name for i in range(md.num_columns)].index(column)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError(f"row group without {column} stats in {fpath}")
-                lo = st.min if lo is None or st.min < lo else lo
-                hi = st.max if hi is None or st.max > hi else hi
-        if lo is None:
-            raise ValueError(f"no row groups in {path}")
-        _COL_MINMAX_CACHE[key] = (lo, hi)
-    return _COL_MINMAX_CACHE[key]
+    the same plans as the DataFrame API). `args` binds parameter markers
+    (spark.sql's own argument)."""
+    register_views(spark, sf_dir)
+    return spark.sql(query, args=args)

@@ -1,5 +1,5 @@
-"""THE persisted-layout lifecycle: scratch paths, source-mtime freshness
-stamps, and the adopt-or-build contract every derived artifact follows.
+"""THE persisted-layout lifecycle: scratch paths, source freshness stamps,
+and the adopt-or-build contract every derived artifact follows.
 
 The reference keeps no derived artifacts at all - every request recomputes
 from the heap tables (reference: webserver/server.py:140-236). At 100 TB
@@ -16,8 +16,9 @@ The contract, shared by every layout:
 - **scratch(sf_dir, family, name)** - a /tmp path namespaced by an md5 tag
   of the source dir, so layouts for different SFs never collide. At 100 TB
   this is a warehouse path; /tmp is the local-mode stand-in.
-- **source_stamp(sf_dir, *tables, spec=...)** - the freshness token: the
-  source parquet mtimes plus any layout parameters. Regenerated inputs OR
+- **source_stamp(sf_dir, *tables, spec=...)** - the freshness token: each
+  source table's catalog.file_stamp (per parquet file: name, mtime in ns,
+  size) plus any layout parameters. Regenerated inputs OR
   a changed layout spec change the stamp, forcing a rewrite - a persisted
   artifact can never silently serve stale or mis-parameterized data.
 - **is_fresh(marker, stamp, data_dirs=...)** - adoption gate: the marker
@@ -36,7 +37,7 @@ import os
 import tempfile
 import threading
 
-from nyc_analytics_database_platform_spark.catalog import table_path
+from nyc_analytics_database_platform_spark.catalog import file_stamp, table_path
 
 _ARTIFACT_LOCK = threading.RLock()
 _MISSING = object()
@@ -56,11 +57,9 @@ def scratch(sf_dir: str, family: str, name: str) -> str:
 
 
 def source_stamp(sf_dir: str, *tables: str, spec: str = "") -> str:
-    """Freshness stamp: source parquet mtimes (one per table), plus an
-    optional layout-parameter spec. Either changing forces a rebuild."""
-    parts = [
-        f"{t}:{os.path.getmtime(table_path(sf_dir, t)):.0f}" for t in tables
-    ]
+    """Freshness stamp: each table's file_stamp, plus an optional
+    layout-parameter spec. Either changing forces a rebuild."""
+    parts = [f"{t}:{file_stamp(table_path(sf_dir, t))}" for t in tables]
     if spec:
         parts.append(spec)
     return "|".join(parts)
@@ -101,9 +100,8 @@ def session_artifact(spark, key: tuple, builder):
     v1 state), whose parquet on disk is the durable artifact but whose
     re-read + localCheckpoint would cost a small job on every consumer
     call, and the driver-side NYC dimension maps of nyc.api, keyed by the
-    dimension frame and its files' stamps. A key carries its own freshness
-    stamp, so regenerated inputs miss naturally; same pattern as
-    catalog.load's per-session plan memo.
+    dimension frame and its files' stamps. A key carries its inputs'
+    catalog.file_stamp, so regenerated inputs miss naturally.
 
     A hit takes no lock. A miss builds under one module-wide re-entrant
     lock (a builder may itself call this memo), so concurrent clients

@@ -18,7 +18,7 @@ dimension tables a request reads become driver-side maps, built once per
 session and source by `_dim_map` through layouts.session_artifact:
 (borough, block, lot) -> (geographic_id, borough_name), complaint_type_id ->
 name, and geographic_id -> [(property_id, address)]. A map's key holds the
-dimension frame and its files' (URI, mtime, size), so a different frame or
+dimension frame and its files' catalog.file_stamp, so a different frame or
 a rewritten file builds a new map; clear_engine_state drops them all. Fact
 tables are never memoized. A request then collects its parcels' filtered
 rows once from service_request (`_requests`) and once from sale
@@ -32,17 +32,16 @@ Nothing is cached in the shared session's CacheManager.
 
 from __future__ import annotations
 
-import os
 from collections import Counter, defaultdict
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_analytics_database_platform_spark import layouts
+from nyc_analytics_database_platform_spark.catalog import file_stamp
 from nyc_analytics_database_platform_spark.nyc.schema import ACTIVE_STATUSES
 
 DEFAULT_START, DEFAULT_END = "2024-01-01", "2024-12-31"  # server.py:392-395
@@ -75,21 +74,12 @@ class GeocodeError(Exception):
         return f"could not geocode address: {self.address!r}"
 
 
-def _file_stamp(uri: str) -> tuple:
-    """(uri, mtime ns, size) of a local input file; a remote one is its URI."""
-    url = urlparse(uri)
-    if url.scheme not in ("", "file"):
-        return (uri,)
-    st = os.stat(unquote(url.path))
-    return (uri, st.st_mtime_ns, st.st_size)
-
-
 def _dim_map(spark: SparkSession, tables: dict[str, DataFrame], name: str, fold):
     """fold(dimension frame) as a driver-side value, memoized per session
     under the frame itself (a live entry never matches another frame) and
     the stamps of its input files (a rewritten file misses)."""
     df = tables[name]
-    stamp = tuple(_file_stamp(uri) for uri in df.inputFiles())
+    stamp = tuple(file_stamp(uri) for uri in df.inputFiles())
     return layouts.session_artifact(spark, ("nyc.dim", name, df, stamp), lambda: fold(df))
 
 

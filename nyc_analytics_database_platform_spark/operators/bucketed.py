@@ -30,8 +30,8 @@ At 100 TB "one file per bucket" means bucket count scales with data
 (size buckets to the ~1 GB file target, e.g. 100k buckets for 100 TB),
 which is exactly how Hive/Iceberg bucket specs are sized in production.
 
-Freshness: layouts carry a source-mtime stamp (same discipline as
-parity_scalejoin) - regenerated inputs force a rewrite, never a stale
+Freshness: layouts carry layouts.source_stamp (the source files' names,
+mtimes and sizes) - regenerated inputs force a rewrite, never a stale
 serve. A fresh session adopts existing files with CREATE TABLE ...
 CLUSTERED BY DDL: the catalog entry, not the data, carries the bucket
 spec, so adoption moves zero bytes.

@@ -51,6 +51,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_analytics_database_platform_spark.catalog import footer_file_minmax
+
 
 class CommitConflict(Exception):
     """Another writer published this version first. Re-read the head,
@@ -271,21 +273,6 @@ def append(spark: SparkSession, root: str, df: DataFrame,
             head = latest_version(root)
 
 
-def _footer_minmax(path: str, column: str):
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = [md.schema.column(i).name for i in range(md.num_columns)].index(column)
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        lo = st.min if lo is None or st.min < lo else lo
-        hi = st.max if hi is None or st.max > hi else hi
-    return lo, hi
-
-
 def delete_range_cow(spark: SparkSession, root: str, column: str,
                      lo, hi) -> tuple[int, dict]:
     """Copy-on-write delete of rows with lo <= column < hi. Files whose
@@ -300,7 +287,7 @@ def delete_range_cow(spark: SparkSession, root: str, column: str,
     parent_files = entry["files"]
     touched, kept = [], []
     for rel in parent_files:
-        fmin, fmax = _footer_minmax(os.path.join(root, rel), column)
+        fmin, fmax = footer_file_minmax(os.path.join(root, rel), column)
         if fmin is None or (fmax >= lo and fmin < hi):
             touched.append(rel)
         else:
@@ -412,13 +399,13 @@ def purge_deletes(spark: SparkSession, root: str,
         raise ValueError("purge prunes on a delete key column")
     klo = khi = None
     for rel in dv:
-        lo, hi = _footer_minmax(os.path.join(root, rel), stats_col)
+        lo, hi = footer_file_minmax(os.path.join(root, rel), stats_col)
         if lo is not None:
             klo = lo if klo is None or lo < klo else klo
             khi = hi if khi is None or hi > khi else khi
     touched, kept = [], []
     for rel in entry["files"]:
-        fmin, fmax = _footer_minmax(os.path.join(root, rel), stats_col)
+        fmin, fmax = footer_file_minmax(os.path.join(root, rel), stats_col)
         if fmin is None or klo is None or (fmax >= klo and fmin <= khi):
             touched.append(rel)
         else:
@@ -509,7 +496,7 @@ def changes_between(spark: SparkSession, root: str, v_from: int,
                 if klo is not None:
                     pruned = []
                     for rel in common:
-                        fmin, fmax = _footer_minmax(
+                        fmin, fmax = footer_file_minmax(
                             os.path.join(root, rel), key_cols[0]
                         )
                         if fmin is None or (fmax >= klo and fmin <= khi):

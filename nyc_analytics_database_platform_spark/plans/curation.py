@@ -54,7 +54,7 @@ def curate_corpus(
     """Returns (curated docs DataFrame, stage-by-stage report).
 
     `n_input` lets a caller that already knows the corpus row count (e.g.
-    from parquet footer metadata - catalog.footer_row_count) skip the
+    catalog.footer_row_count, a footer read on flat layouts) skip the
     count() job; None keeps the self-contained behavior."""
     if n_input is None:
         n_input = docs.count()

@@ -320,12 +320,8 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", parallel=True)
     # n_input from the parquet footer (driver-side metadata read, no
     # Spark job) - the same count()-avoidance discipline as the RFM
-    # quintile path switch; fall back to the in-engine count on layouts
-    # the footer reader cannot walk.
-    try:
-        n_input = footer_row_count(sf_dir, "documents")
-    except Exception:  # noqa: BLE001 - non-local/partitioned layouts
-        n_input = None
+    # quintile path switch.
+    n_input = footer_row_count(spark, sf_dir, "documents")
     _, report = curate_corpus(
         docs,
         min_tokens=_MIN_TOKENS,

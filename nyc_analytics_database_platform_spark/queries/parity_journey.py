@@ -329,17 +329,9 @@ def _km_bucket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("first_d2", "first_d")
     )
     # Horizon from parquet footer stats (catalog.footer_column_minmax): a
-    # driver-side metadata read replaces the second full orders scan; the
-    # agg path stays as the fallback for layouts without stats.
-    try:
-        _, max_dt = footer_column_minmax(sf_dir, "orders", "o_orderdate")
-        horizon = spark.createDataFrame(
-            [(max_dt.date(),)], "max_d date"
-        )
-    except Exception:
-        horizon = load(spark, sf_dir, "orders").agg(
-            F.max(F.to_date("o_orderdate")).alias("max_d")
-        )
+    # driver-side metadata read replaces the second full orders scan.
+    _, max_dt = footer_column_minmax(spark, sf_dir, "orders", "o_orderdate")
+    horizon = spark.createDataFrame([(max_dt and max_dt.date(),)], "max_d date")
     subjects = dur.crossJoin(F.broadcast(horizon)).select(
         F.when(F.col("second_d").isNotNull(), 1).otherwise(0).alias("event"),
         F.when(

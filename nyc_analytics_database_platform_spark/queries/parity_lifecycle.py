@@ -738,12 +738,11 @@ def build_month_sketch_table(spark: SparkSession, sf_dir: str) -> str:
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     path = _scratch(sf_dir, "hll_month_sketches")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         (
             load(spark, sf_dir, "orders")
@@ -983,12 +982,11 @@ def build_month_quantile_table(spark: SparkSession, sf_dir: str) -> str:
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     path = _scratch(sf_dir, "quantile_month_hist")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         orders = load(spark, sf_dir, "orders")
         lo, hi = orders.agg(
@@ -1256,12 +1254,11 @@ def build_source_token_mg_table(spark: SparkSession, sf_dir: str) -> str:
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     path = _scratch(sf_dir, "mg_source_token_summaries")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "documents")
+    stamp = layouts.source_stamp(sf_dir, "documents")
     if not _is_fresh(marker, stamp):
         docs = load(spark, sf_dir, "documents")
         toks = docs.select(
@@ -1374,12 +1371,11 @@ def compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     frag = _scratch(sf_dir, "compaction_fragmented")
     marker = frag + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         load(spark, sf_dir, "orders").repartition(64).write.mode(
             "overwrite"
@@ -1430,13 +1426,12 @@ def build_orders_date_manifest(spark: SparkSession, sf_dir: str) -> tuple[str, s
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     layout = _scratch(sf_dir, "orders_range_fragmented")
     manifest = _scratch(sf_dir, "orders_date_manifest")
     marker = layout + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         # INT96 timestamps carry no parquet min/max statistics; the layout
         # must write TIMESTAMP_MICROS or the manifest has nothing to read
@@ -1532,12 +1527,11 @@ def build_scd2_history_table(spark: SparkSession, sf_dir: str) -> str:
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _is_fresh,
         _scratch,
-        _source_stamp,
     )
 
     path = _scratch(sf_dir, "scd2_history_table")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         cutoff = F.lit("2001-07-01").cast("timestamp")
         scd2_intervals(
@@ -1640,7 +1634,6 @@ def build_compacted_manifest_layout(
     )
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _scratch,
-        _source_stamp,
     )
 
     frag = _scratch(sf_dir, "orders_cmanifest_fragmented")
@@ -1648,7 +1641,7 @@ def build_compacted_manifest_layout(
     manifest = _scratch(sf_dir, "orders_cmanifest_manifest")
     marker = dst + "_done"
     stats_file = dst + "_stats.json"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not layouts.is_fresh(marker, stamp, data_dirs=(dst, manifest)):
         prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
         spark.conf.set(
@@ -1750,12 +1743,11 @@ def build_scd2_current_snapshot(spark: SparkSession, sf_dir: str) -> str:
     persisted history table, freshness-stamped on the same source."""
     from nyc_analytics_database_platform_spark.queries.parity_scalejoin import (
         _scratch,
-        _source_stamp,
     )
 
     path = _scratch(sf_dir, "scd2_current_snapshot")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not layouts.is_fresh(marker, stamp, data_dirs=(path,)):
         hist = spark.read.parquet(build_scd2_history_table(spark, sf_dir))
         hist.filter("is_current").write.mode("overwrite").parquet(path)

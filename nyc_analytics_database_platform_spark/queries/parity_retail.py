@@ -121,25 +121,19 @@ def _rfm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Anchor from parquet footer stats - a driver-side metadata read
     # replaces a second full orders scan (same switch discipline as the
-    # footer_row_count path below); Spark agg stays as the fallback.
-    try:
-        _, _max_dt = footer_column_minmax(sf_dir, "orders", "o_orderdate")
-        anchor = spark.createDataFrame([(_max_dt.date(),)], "anchor_dt date")
-    except Exception:
-        anchor = orders.agg(F.max(F.to_date("o_orderdate")).alias("anchor_dt"))
+    # footer_row_count path below).
+    _, _max_dt = footer_column_minmax(spark, sf_dir, "orders", "o_orderdate")
+    anchor = spark.createDataFrame([(_max_dt and _max_dt.date(),)], "anchor_dt date")
     base = (
         per_cust.crossJoin(F.broadcast(anchor))
         .withColumn("recency_days", F.datediff("anchor_dt", "last_dt"))
     )
     mode = os.environ.get("SPARK_GRAFT_RFM_QUINTILE", "auto").lower()
     if mode == "auto":
-        # Footer-metadata row count (memoized, no Spark job) — a count()
-        # job here would add a full fact scan to the timed query body at
-        # exactly the scales where the switch matters.
-        try:
-            n_orders = footer_row_count(sf_dir, "orders")
-        except Exception:
-            n_orders = orders.count()
+        # Footer-metadata row count (no Spark job) — a count() job here
+        # would add a full fact scan to the timed query body at exactly the
+        # scales where the switch matters.
+        n_orders = footer_row_count(spark, sf_dir, "orders")
         mode = (
             "window"
             if n_orders < _RFM_PREFIXSUM_MIN_ORDERS

@@ -48,10 +48,6 @@ def _scratch(sf_dir: str, name: str) -> str:
     return layouts.scratch(sf_dir, "scalejoin", name)
 
 
-def _source_stamp(sf_dir: str, *tables: str, spec: str = "") -> str:
-    return layouts.source_stamp(sf_dir, *tables, spec=spec)
-
-
 _is_fresh = layouts.is_fresh
 _tag = layouts.tag
 
@@ -77,7 +73,7 @@ def build_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o_path, c_path = os.path.join(base, "orders"), os.path.join(base, "customer")
 
     done = os.path.join(base, "_layout_done")
-    stamp = _source_stamp(sf_dir, "orders", "customer")
+    stamp = layouts.source_stamp(sf_dir, "orders", "customer")
     if not _is_fresh(done, stamp):
         spark.sql(f"DROP TABLE IF EXISTS {bo}")
         spark.sql(f"DROP TABLE IF EXISTS {bc}")
@@ -217,7 +213,7 @@ def dpp_partitioned_month_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch(sf_dir, "dpp_orders_by_month")
     orders = load(spark, sf_dir, "orders")
     marker = path + "_done"
-    stamp = _source_stamp(sf_dir, "orders")
+    stamp = layouts.source_stamp(sf_dir, "orders")
     if not _is_fresh(marker, stamp):
         (
             orders.withColumn(
@@ -346,8 +342,8 @@ def build_zorder_orders(spark: SparkSession, sf_dir: str) -> str:
     # The row-group policy rides in the stamp: changing the target count
     # must rebuild a cached layout, or the old linear-footer files would
     # be silently adopted.
-    stamp = _source_stamp(sf_dir, "orders",
-                          spec=f"zorder:rgs{_ZORDER_TARGET_RGS}")
+    stamp = layouts.source_stamp(sf_dir, "orders",
+                                 spec=f"zorder:rgs{_ZORDER_TARGET_RGS}")
     if not _is_fresh(marker, stamp):
         # INT96 (Spark's legacy parquet timestamp encoding) carries NO
         # min/max statistics, which would silently disable date-dimension

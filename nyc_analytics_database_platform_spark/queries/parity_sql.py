@@ -240,11 +240,9 @@ def sql_parameterized_nation_orders(spark: SparkSession, sf_dir: str) -> DataFra
     text serves any parameter set and user input never concatenates into
     SQL. Catalyst folds the bound literals into the scan filters exactly
     as if they were inline."""
-    from nyc_analytics_database_platform_spark.catalog import register_views
-
-    if getattr(spark, "_nadb_registered_sf_dir", None) != sf_dir:
-        register_views(spark, sf_dir)
-    return spark.sql(
+    return sql(
+        spark,
+        sf_dir,
         """
         SELECT o.o_orderpriority AS priority,
                COUNT(*) AS n_orders,
@@ -278,12 +276,10 @@ def sql_identifier_clause_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     which value parameters cannot). The reference interpolates table names
     directly into query strings (server.py's f-string FROM clauses); this
     is the engine-level fix."""
-    from nyc_analytics_database_platform_spark.catalog import register_views
-
-    if getattr(spark, "_nadb_registered_sf_dir", None) != sf_dir:
-        register_views(spark, sf_dir)
     frames = [
-        spark.sql(
+        sql(
+            spark,
+            sf_dir,
             "SELECT :label AS tbl, COUNT(*) AS n FROM IDENTIFIER(:tbl)",
             args={"label": t, "tbl": t},
         )

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_analytics_database_platform_spark import layouts
-from nyc_analytics_database_platform_spark.catalog import load
+from nyc_analytics_database_platform_spark.catalog import (
+    footer_column_minmax,
+    footer_file_minmax,
+    footer_row_count,
+    load,
+)
 from nyc_analytics_database_platform_spark.functions.numeric import ORACLE_SUM
 from nyc_analytics_database_platform_spark.operators import txnlog
 from nyc_analytics_database_platform_spark.registry import register
@@ -73,9 +78,7 @@ def build_orders_commit_chain(
     # stays production-constant — what keeps a fixed-width delete/CDC
     # O(changed files) while the table grows (measured in SCALE.md: the
     # state-diff alternative scales with the table, this does not).
-    from nyc_analytics_database_platform_spark.catalog import footer_row_count
-
-    rows = footer_row_count(sf_dir, "orders")
+    rows = footer_row_count(spark, sf_dir, "orders")
     n1 = max(8, rows // 150_000)
     txnlog.append(spark, root, orders.filter(F.col("o_orderdate") < cutoff),
                   range_col="o_orderkey", n_files=n1)
@@ -354,11 +357,10 @@ def build_mor_chain(spark: SparkSession, sf_dir: str) -> str:
     if layouts.is_fresh(marker, stamp) and txnlog.chain_intact(root):
         return root
     shutil.rmtree(root, ignore_errors=True)
-    from nyc_analytics_database_platform_spark.catalog import footer_row_count
 
     orders = load(spark, sf_dir, "orders")
     txnlog.append(spark, root, orders, range_col="o_orderkey",
-                  n_files=max(8, footer_row_count(sf_dir, "orders") // 150_000))
+                  n_files=max(8, footer_row_count(spark, sf_dir, "orders") // 150_000))
     txnlog.delete_where_mor(
         spark, root, ["o_orderkey"],
         (F.col("o_orderpriority") == "1-URGENT")
@@ -1100,11 +1102,8 @@ def stream_txnlog_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Three chronological batches of takedown keys (thirds of the
         # o_orderkey % 7 == 0 set, split by key range).
         keys = orders.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-        from nyc_analytics_database_platform_spark.catalog import (
-            footer_column_minmax,
-        )
 
-        kmin, kmax = footer_column_minmax(sf_dir, "orders", "o_orderkey")
+        kmin, kmax = footer_column_minmax(spark, sf_dir, "orders", "o_orderkey")
         c1 = kmin + (kmax - kmin) // 3
         c2 = kmin + 2 * (kmax - kmin) // 3
         stages = [
@@ -1217,11 +1216,7 @@ def _build_compactplan_chain(spark: SparkSession, sf_dir: str,
                              variant: str = "compactplan") -> tuple:
     """The deterministic coarse/fine bucketed chain behind the compaction
     queries; returns (root, w1, w2). See txnlog_compaction_plan."""
-    from nyc_analytics_database_platform_spark.catalog import (
-        footer_column_minmax,
-    )
-
-    _kmin_all, kmax_all = footer_column_minmax(sf_dir, "orders", "o_orderkey")
+    _kmin_all, kmax_all = footer_column_minmax(spark, sf_dir, "orders", "o_orderkey")
     w1 = kmax_all // 4 + 1
     w2 = kmax_all // 16 + 1
     half = kmax_all // 2
@@ -1278,19 +1273,17 @@ def _compaction_manifest_plan(spark: SparkSession, sf_dir: str,
     file set from the same manifest read."""
     import pyarrow.parquet as pq
 
-    from nyc_analytics_database_platform_spark.catalog import footer_row_count
-
     root, w1, w2 = _build_compactplan_chain(spark, sf_dir, variant)
     head = txnlog.latest_version(root)
     e1 = txnlog.read_entry(root, 1)
     entry = txnlog.read_entry(root, head)
     v1_files = set(e1["files"])
-    total = footer_row_count(sf_dir, "orders")
+    total = footer_row_count(spark, sf_dir, "orders")
     manifest = []
     for rel in entry["files"]:
         path = os.path.join(root, rel)
         n_rows = pq.ParquetFile(path).metadata.num_rows
-        kmin, kmax = txnlog._footer_minmax(path, "o_orderkey")
+        kmin, kmax = footer_file_minmax(path, "o_orderkey")
         file_set = "coarse" if rel in v1_files else "fine"
         width = w1 if file_set == "coarse" else w2
         manifest.append((rel, file_set, kmin // width, n_rows, kmin, kmax))
@@ -1387,7 +1380,7 @@ def _mor_delete_compaction_plan(root: str) -> tuple[list[str], list[tuple]]:
     )
     dv_ranges = []
     for rel in entry.get("delete_files", []):
-        lo, hi = txnlog._footer_minmax(os.path.join(root, rel), key)
+        lo, hi = footer_file_minmax(os.path.join(root, rel), key)
         if lo is not None:
             dv_ranges.append((lo, hi))
     manifest, selected = [], []
@@ -1401,7 +1394,7 @@ def _mor_delete_compaction_plan(root: str) -> tuple[list[str], list[tuple]]:
         if clean_by_provenance:
             manifest.append((rel, None, None, False))
             continue
-        lo, hi = txnlog._footer_minmax(os.path.join(root, rel), key)
+        lo, hi = footer_file_minmax(os.path.join(root, rel), key)
         # A file without key stats cannot be proven clean — select it
         # (conservative: compaction may only over-rewrite, never miss a
         # hidden delete).
@@ -1465,9 +1458,6 @@ def stream_mor_compaction_roundtrip(spark: SparkSession,
         _stage_ordered_files,
         drain_or_raise,
     )
-    from nyc_analytics_database_platform_spark.catalog import (
-        footer_column_minmax,
-    )
 
     root = _root(sf_dir, "morcompact")
     marker = root + "_done"
@@ -1477,7 +1467,7 @@ def stream_mor_compaction_roundtrip(spark: SparkSession,
         shutil.rmtree(root, ignore_errors=True)
         orders = load(spark, sf_dir, "orders")
         txnlog.append(spark, root, orders, range_col="o_orderkey", n_files=6)
-        kmin, kmax = footer_column_minmax(sf_dir, "orders", "o_orderkey")
+        kmin, kmax = footer_column_minmax(spark, sf_dir, "orders", "o_orderkey")
         c1 = kmin + (kmax - kmin) // 3
         keys = orders.filter(
             (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") < c1)

@@ -231,13 +231,57 @@ def test_session_artifact_builds_once_under_concurrency():
     assert all(v is values[0] for v in values)
 
 
-def test_footer_readers_raise_on_nested_layouts(tmp_path):
-    """footer_row_count / footer_column_minmax read top-level files only, so
-    a table directory that also holds a subdirectory must raise (callers
-    fall back to Spark) rather than undercount."""
+def test_source_stamp_sees_same_second_rewrite(tmp_path):
+    """A table rewritten with a different size whose mtime is then set back
+    (same second, even the same nanosecond) still changes the stamp, so a
+    persisted layout built from the old file is never adopted."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest
+
+    from nyc_analytics_database_platform_spark import layouts
+    from nyc_analytics_database_platform_spark.catalog import table_path
+
+    sf = str(tmp_path)
+    path = table_path(sf, "t")
+    pq.write_table(pa.table({"k": [1, 2, 3]}), path)
+    before = os.stat(path)
+    s1 = layouts.source_stamp(sf, "t")
+    pq.write_table(pa.table({"k": list(range(100))}), path)
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    assert os.stat(path).st_size != before.st_size
+    assert layouts.source_stamp(sf, "t") != s1
+
+
+def test_clear_engine_state_keeps_load_memo(spark, sf_dir):
+    """The two memo lifetimes: clear_engine_state empties the block-backed
+    artifact memo but keeps catalog.load's plan memo, whose entries carry
+    the file stamp they were read at."""
+    from nyc_analytics_database_platform_spark import layouts
+    from nyc_analytics_database_platform_spark.catalog import (
+        clear_engine_state,
+        file_stamp,
+        load,
+        table_path,
+    )
+
+    frame = load(spark, sf_dir, "region")
+    layouts.session_artifact(spark, ("test-lifetimes",), lambda: 1)
+    clear_engine_state(spark)
+    assert not spark._nadb_artifact_cache
+    stamp, memo_frame = spark._nadb_load_cache[(sf_dir, "region", False)]
+    assert memo_frame is frame
+    assert stamp == file_stamp(table_path(sf_dir, "region"))
+    assert load(spark, sf_dir, "region") is frame
+
+
+def test_footer_readers_fall_back_on_nested_layouts(spark, tmp_path):
+    """footer_row_count / footer_column_minmax read top-level files only, so
+    a table directory that also holds a subdirectory is answered by one
+    Spark aggregate over the table instead of an undercount: a partitioned
+    layout gives the values of the same files laid out flat, and a mixed
+    one (top-level files beside a partition directory) what Spark reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from nyc_analytics_database_platform_spark.catalog import (
         footer_column_minmax,
@@ -245,17 +289,25 @@ def test_footer_readers_raise_on_nested_layouts(tmp_path):
         table_path,
     )
 
-    part = pa.table({"k": [1, 2, 3]})
-    flat, mixed = str(tmp_path / "flat"), str(tmp_path / "mixed")
-    for sf in (flat, mixed):
-        os.makedirs(table_path(sf, "t"))
-        pq.write_table(part, os.path.join(table_path(sf, "t"), "part-0.parquet"))
-    assert footer_row_count(flat, "t") == 3
-    assert footer_column_minmax(flat, "t", "k") == (1, 3)
-    nested = os.path.join(table_path(mixed, "t"), "k=9")
-    os.makedirs(nested)
-    pq.write_table(pa.table({"k": [9]}), os.path.join(nested, "part-1.parquet"))
-    with pytest.raises(ValueError, match="subdirectories"):
-        footer_row_count(mixed, "t")
-    with pytest.raises(ValueError, match="subdirectories"):
-        footer_column_minmax(mixed, "t", "k")
+    def write(sf, rel, table):
+        path = os.path.join(table_path(str(tmp_path / sf), "t"), rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(table, path)
+        return str(tmp_path / sf)
+
+    part, late = pa.table({"k": [1, 2, 3]}), pa.table({"k": [9]})
+    flat = write("flat", "part-0.parquet", part)
+    assert footer_row_count(spark, flat, "t") == 3
+    assert footer_column_minmax(spark, flat, "t", "k") == (1, 3)
+    write("flat", "part-1.parquet", late)
+    write("nested", "batch=0/part-0.parquet", part)
+    nested = write("nested", "batch=1/part-1.parquet", late)
+    assert footer_row_count(spark, nested, "t") == footer_row_count(spark, flat, "t") == 4
+    assert (footer_column_minmax(spark, nested, "t", "k")
+            == footer_column_minmax(spark, flat, "t", "k") == (1, 9))
+    write("mixed", "part-0.parquet", part)
+    mixed = write("mixed", "batch=1/part-1.parquet", late)
+    seen = spark.read.parquet(table_path(mixed, "t"))
+    assert footer_row_count(spark, mixed, "t") == seen.count()
+    assert (footer_column_minmax(spark, mixed, "t", "k")
+            == tuple(seen.agg(F.min("k"), F.max("k")).first()))
